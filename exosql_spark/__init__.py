@@ -20,6 +20,9 @@ Architecture (Spark-first, NOT a port):
   (:mod:`exosql_spark.operators`).
 """
 
+# first: makes every later Python-worker call skip re-reading unchanged
+# zip archives on sys.path (see the module docstring)
+from exosql_spark import _zipimport_cache  # noqa: F401
 from exosql_spark.session import get_spark
 from exosql_spark.io import TABLES, load_table, register_views
 from exosql_spark.context import Context, Result, query, explain, format_result, to_result

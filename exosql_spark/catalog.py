@@ -510,7 +510,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: q.oracle for name, q in all_queries().items() if q.oracle}
-
-
-def bench_queries() -> dict[str, QueryFn]:
-    return {name: q.fn for name, q in all_queries().items() if q.bench}

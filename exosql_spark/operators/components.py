@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 def connected_components(
@@ -60,24 +61,30 @@ def connected_components(
         .observe(obs_e, F.count(F.lit(1)).alias("n2e"))
         .localCheckpoint()
     )
-    # Convergence scalar (r19, the kcore pattern): labels are LONG ids
-    # and min-propagation is monotone NON-INCREASING per id over a
-    # fixed id set, so "no label changed" ⟺ "Σ labels unchanged" — the
-    # Σ rides each generation's checkpoint job via observe, replacing
-    # the old per-round join + limit(1).count() convergence job.
-    # DECIMAL(38,0) so a 10⁹-node graph of 10¹⁸-ish ids cannot
-    # overflow the sum.
+    # Convergence check riding each generation's checkpoint job via
+    # observe (the kcore pattern: no convergence job of its own).
+    # Integral ids take the Σ fast path: min-propagation is monotone
+    # NON-INCREASING per id over a fixed id set, so "no label changed"
+    # ⟺ "Σ labels unchanged"; DECIMAL(38,0) so a 10⁹-node graph of
+    # 10¹⁸-ish ids cannot overflow the sum.  Other orderable ids
+    # (strings, dates, …) cannot be summed, so each round carries the
+    # previous label through the same aggregation and counts the ids
+    # whose label moved.
+    id_type = e.schema["u"].dataType
+    sigma = isinstance(id_type, IntegralType)
     _dsum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+    _changed = F.count_if(F.col("component") != F.col("_prev")).alias("s")
     obs0 = Observation("cc_init")
     labels = (
         e.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .observe(obs0, _dsum, F.count(F.lit(1)).alias("nv"))
+        .observe(obs0, F.count(F.lit(1)).alias("nv"), *([_dsum] if sigma else []))
         .localCheckpoint()
     )
-    prev_sum = obs0.get["s"]
-    nv = int(obs0.get["nv"] or 0)
+    init = obs0.get
+    prev_sum = init.get("s")
+    nv = int(init["nv"] or 0)
     n2e = int(obs_e.get["n2e"] or 0)
     spark = edges.sparkSession
     p_loop, _ = loop_partitions(spark, max(nv, n2e))
@@ -93,18 +100,31 @@ def connected_components(
                 .select(F.col("u").alias("id"), "component")
             )
             obs = Observation(f"cc_{rounds}")
-            new_labels = (
-                labels.union(incoming)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .observe(obs, _dsum)
-                .localCheckpoint()
-            )
-            new_sum = obs.get["s"]
-            labels = new_labels
-            if new_sum == prev_sum:
+            if sigma:
+                new_labels = (
+                    labels.union(incoming)
+                    .groupBy("id")
+                    .agg(F.min("component").alias("component"))
+                    .observe(obs, _dsum)
+                )
+            else:
+                new_labels = (
+                    labels.withColumn("_prev", F.col("component"))
+                    .union(incoming.withColumn("_prev", F.lit(None).cast(id_type)))
+                    .groupBy("id")
+                    .agg(
+                        F.min("component").alias("component"),
+                        F.min("_prev").alias("_prev"),
+                    )
+                    .observe(obs, _changed)
+                    .drop("_prev")
+                )
+            labels = new_labels.localCheckpoint()
+            s = obs.get["s"]
+            converged = s == prev_sum if sigma else s == 0
+            prev_sum = s
+            if converged:
                 break
-            prev_sum = new_sum
     return labels
 
 

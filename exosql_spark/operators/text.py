@@ -138,22 +138,8 @@ _LANG_LEXICON: dict[str, list[str]] = {
 }
 
 
-def lang_scores(col: Column | str) -> Column:
-    """Map<lang, hits/token> of lexicon hit-rates."""
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
-    n = F.greatest(F.size(toks), F.lit(1))
-    pairs = [
-        F.struct(
-            F.lit(lang).alias("lang"),
-            (F.size(F.filter(toks, lambda t: t.isin(*words))) / n).alias("score"),
-        )
-        for lang, words in _LANG_LEXICON.items()
-    ]
-    return F.map_from_entries(F.array(*pairs))
-
-
 def lang_id(col: Column | str) -> Column:
-    """argmax over lang_scores; 'und' when nothing hits.
+    """argmax of per-language lexicon hit-rates; 'und' when nothing hits.
 
     With a column NAME (str) this builds as ONE SQL-text expression
     (r18 — module-top block comment) that let-binds the lowercased

@@ -9,6 +9,9 @@ configs are what we would set cluster-side for the 100 TB target:
   cluster AQE's coalescing makes the initial number a ceiling, not a knob.
 - Arrow enabled so any pandas_udf / toPandas path is vectorized.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- The package's parent directory leads ``spark.executorEnv.PYTHONPATH``,
+  so Python workers (data-source planners, read tasks, UDFs) can import
+  ``exosql_spark`` whatever the driver's working directory is.
 """
 
 from __future__ import annotations
@@ -22,6 +25,9 @@ from pyspark.sql import SparkSession
 # micros in io.load_table. Session-scoped, safe to set at runtime.
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
+EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -33,6 +39,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or default_parallelism()
+    extra_conf = dict(extra_conf or {})
+    caller_path = extra_conf.pop(EXECUTOR_PYTHONPATH, "")
+    worker_path = os.pathsep.join(p for p in (_PACKAGE_PARENT, caller_path) if p)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -46,8 +55,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config(NANOS_AS_LONG, "true")
+        .config(EXECUTOR_PYTHONPATH, worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

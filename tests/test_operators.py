@@ -1418,6 +1418,91 @@ class TestConnectedComponents:
             }
             assert star == prop, f"{name}: star != propagation"
 
+    @pytest.mark.parametrize("ansi", ["true", "false"])
+    def test_string_ids_reach_fixpoint(self, spark, ansi):
+        """Non-integral ids cannot ride the Σ convergence check: under
+        ANSI the decimal cast raised CAST_INVALID_INPUT, and without it
+        every Σ was NULL, so the loop stopped after one round with the
+        label only one hop along the path."""
+        from exosql_spark.operators.components import connected_components
+
+        ids = [f"n{i:02d}" for i in range(8)]
+        edges = spark.createDataFrame(
+            list(zip(ids, ids[1:])), "id_a string, id_b string"
+        )
+        saved = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            comp = {r.id: r.component for r in connected_components(edges).collect()}
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", saved)
+        assert comp == {i: "n00" for i in ids}
+
+    @pytest.mark.parametrize("dtype", ["long", "string"])
+    @pytest.mark.parametrize("graph", ["path", "star"])
+    def test_convergence_check_matches_join_check(self, spark, monkeypatch, dtype, graph):
+        """The observe-borne convergence check (Σ labels for integral
+        ids, changed-label count otherwise) must stop on the same round
+        as the join-based check it replaced, with the same labels."""
+        import pyspark.sql
+
+        from exosql_spark.operators.components import connected_components
+
+        if graph == "path":  # min at one end: one hop per round
+            pairs = [(i, i + 1) for i in range(7)]
+        else:  # max id at the centre: leaves reach the min via it
+            pairs = [(9, i) for i in range(6)]
+        key = (lambda i: f"n{i:02d}") if dtype == "string" else (lambda i: i)
+        edges = spark.createDataFrame(
+            [(key(a), key(b)) for a, b in pairs], f"id_a {dtype}, id_b {dtype}"
+        )
+
+        # reference: the old per-round join + limit(1).count() check
+        e = (
+            edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+            .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
+            .distinct()
+        )
+        labels = e.select(F.col("u").alias("id")).distinct().withColumn(
+            "component", F.col("id")
+        )
+        ref_rounds = 0
+        while True:
+            ref_rounds += 1
+            incoming = e.join(
+                labels.withColumnRenamed("id", "v2"), e.v == F.col("v2")
+            ).select(F.col("u").alias("id"), "component")
+            new = (
+                labels.union(incoming)
+                .groupBy("id")
+                .agg(F.min("component").alias("component"))
+                .localCheckpoint()
+            )
+            changed = (
+                new.alias("n")
+                .join(labels.alias("o"), "id")
+                .where(F.col("n.component") != F.col("o.component"))
+                .limit(1)
+                .count()
+            )
+            labels = new
+            if changed == 0:
+                break
+        ref = {r.id: r.component for r in labels.collect()}
+
+        names = []
+
+        class CountingObservation(pyspark.sql.Observation):
+            def __init__(self, name):
+                names.append(name)
+                super().__init__(name)
+
+        monkeypatch.setattr(pyspark.sql, "Observation", CountingObservation)
+        got = {r.id: r.component for r in connected_components(edges).collect()}
+        rounds = sum(n not in ("cc_edges", "cc_init") for n in names)
+        assert got == ref == {key(i): key(0) for i in {x for p in pairs for x in p}}
+        assert rounds == ref_rounds
+
     def test_dedup_components_keeps_representatives(self, spark):
         from exosql_spark.operators.components import dedup_components
 

@@ -3,6 +3,10 @@ pushdown), node source, context integration."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from exosql_spark.context import Context
@@ -42,6 +46,60 @@ class TestHttpDataSource:
         ctx = Context(spark, {"api": {"http": {"pages": 2, "table": "items"}}})
         n = ctx.sql("SELECT count(*) AS n FROM api.items").collect()[0].n
         assert n == 20
+
+    def test_worker_runs_stat_gated_invalidate_caches(self, spark):
+        """Python workers pay ``importlib.invalidate_caches()`` on every
+        planner call and task; the package's stat-gated zipimporter
+        method must be the one they run (stdlib on Python >= 3.13)."""
+        import pandas as pd
+
+        ctx = Context(spark, {"api": {"http": {"pages": 2, "table": "items"}}})
+        assert ctx.sql("SELECT count(*) AS n FROM api.items").collect()[0].n == 20
+
+        def probe(batches):
+            import zipimport
+
+            import exosql_spark  # noqa: F401
+
+            for _ in batches:
+                yield pd.DataFrame(
+                    {"m": [zipimport.zipimporter.invalidate_caches.__module__]}
+                )
+
+        got = spark.range(1).mapInPandas(probe, "m string").collect()[0].m
+        expected = (
+            "exosql_spark._zipimport_cache"
+            if sys.version_info < (3, 13)
+            else "zipimport"
+        )
+        assert got == expected
+
+
+_OTHER_CWD_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from exosql_spark import Context, get_spark
+spark = get_spark(cores=2, extra_conf={"spark.driver.memory": "1g"})
+try:
+    ctx = Context(spark, {"api": {"http": {"pages": 2, "table": "items"}}})
+    print("ROWS", len(ctx.sql("SELECT * FROM api.items").collect()))
+finally:
+    spark.stop()
+"""
+
+
+def test_http_source_from_any_working_directory(tmp_path):
+    """Spark's Python workers start in the driver's working directory
+    with the JVM-built PYTHONPATH; get_spark must hand them the package
+    so a driver run outside the repository can still unpickle the HTTP
+    data source."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", _OTHER_CWD_CHILD, root],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "ROWS 20" in res.stdout, res.stderr[-2000:]
 
 
 class TestNodeSource:
