@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
 
 
 def connected_components(
@@ -62,29 +61,19 @@ def connected_components(
         .localCheckpoint()
     )
     # Convergence check riding each generation's checkpoint job via
-    # observe (the kcore pattern: no convergence job of its own).
-    # Integral ids take the Σ fast path: min-propagation is monotone
-    # NON-INCREASING per id over a fixed id set, so "no label changed"
-    # ⟺ "Σ labels unchanged"; DECIMAL(38,0) so a 10⁹-node graph of
-    # 10¹⁸-ish ids cannot overflow the sum.  Other orderable ids
-    # (strings, dates, …) cannot be summed, so each round carries the
-    # previous label through the same aggregation and counts the ids
-    # whose label moved.
+    # observe (the kcore pattern: no convergence job of its own): each
+    # round carries the previous label through the same aggregation and
+    # counts the ids whose label moved, so any orderable id type works.
     id_type = e.schema["u"].dataType
-    sigma = isinstance(id_type, IntegralType)
-    _dsum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    _changed = F.count_if(F.col("component") != F.col("_prev")).alias("s")
     obs0 = Observation("cc_init")
     labels = (
         e.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .observe(obs0, F.count(F.lit(1)).alias("nv"), *([_dsum] if sigma else []))
+        .observe(obs0, F.count(F.lit(1)).alias("nv"))
         .localCheckpoint()
     )
-    init = obs0.get
-    prev_sum = init.get("s")
-    nv = int(init["nv"] or 0)
+    nv = int(obs0.get["nv"] or 0)
     n2e = int(obs_e.get["n2e"] or 0)
     spark = edges.sparkSession
     p_loop, _ = loop_partitions(spark, max(nv, n2e))
@@ -100,30 +89,22 @@ def connected_components(
                 .select(F.col("u").alias("id"), "component")
             )
             obs = Observation(f"cc_{rounds}")
-            if sigma:
-                new_labels = (
-                    labels.union(incoming)
-                    .groupBy("id")
-                    .agg(F.min("component").alias("component"))
-                    .observe(obs, _dsum)
+            labels = (
+                labels.withColumn("_prev", F.col("component"))
+                .union(incoming.withColumn("_prev", F.lit(None).cast(id_type)))
+                .groupBy("id")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min("_prev").alias("_prev"),
                 )
-            else:
-                new_labels = (
-                    labels.withColumn("_prev", F.col("component"))
-                    .union(incoming.withColumn("_prev", F.lit(None).cast(id_type)))
-                    .groupBy("id")
-                    .agg(
-                        F.min("component").alias("component"),
-                        F.min("_prev").alias("_prev"),
-                    )
-                    .observe(obs, _changed)
-                    .drop("_prev")
+                .observe(
+                    obs,
+                    F.count_if(F.col("component") != F.col("_prev")).alias("changed"),
                 )
-            labels = new_labels.localCheckpoint()
-            s = obs.get["s"]
-            converged = s == prev_sum if sigma else s == 0
-            prev_sum = s
-            if converged:
+                .drop("_prev")
+                .localCheckpoint()
+            )
+            if obs.get["changed"] == 0:
                 break
     return labels
 
@@ -200,7 +181,7 @@ def connected_components_star(
     spark = edges.sparkSession
     # r19 iteration scope (see operators.iterative); the star rounds'
     # set-equality convergence check stays — edge-set equality is not
-    # expressible as a monotone scalar the way min-label sums are
+    # a per-row aggregate the way label propagation's changed count is
     p_loop, _ = loop_partitions(spark, max(nv, ne))
     converged = False
     with loop_conf(spark, p_loop):

@@ -1420,10 +1420,10 @@ class TestConnectedComponents:
 
     @pytest.mark.parametrize("ansi", ["true", "false"])
     def test_string_ids_reach_fixpoint(self, spark, ansi):
-        """Non-integral ids cannot ride the Σ convergence check: under
-        ANSI the decimal cast raised CAST_INVALID_INPUT, and without it
-        every Σ was NULL, so the loop stopped after one round with the
-        label only one hop along the path."""
+        """String ids must converge: a Σ-of-labels check raised
+        CAST_INVALID_INPUT under ANSI, and without ANSI every Σ was
+        NULL, so the loop stopped after one round with the label only
+        one hop along the path."""
         from exosql_spark.operators.components import connected_components
 
         ids = [f"n{i:02d}" for i in range(8)]
@@ -1441,9 +1441,8 @@ class TestConnectedComponents:
     @pytest.mark.parametrize("dtype", ["long", "string"])
     @pytest.mark.parametrize("graph", ["path", "star"])
     def test_convergence_check_matches_join_check(self, spark, monkeypatch, dtype, graph):
-        """The observe-borne convergence check (Σ labels for integral
-        ids, changed-label count otherwise) must stop on the same round
-        as the join-based check it replaced, with the same labels."""
+        """The observe-borne changed-label count must stop on the same
+        round as a join-based convergence check, with the same labels."""
         import pyspark.sql
 
         from exosql_spark.operators.components import connected_components
