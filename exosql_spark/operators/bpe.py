@@ -172,18 +172,18 @@ def learn_bpe(
     Ties break on (left, right) ascending — deterministic across
     engines, runs, and partitionings.
 
-    Merges 2..k run under the iteration scope of
-    ``operators.iterative`` (r19): the first pair-count job counts the
-    exploded pair instances for free via ``observe``, and the
-    remaining fixed-shape merge rounds run with AQE off and a
-    size-derived shuffle partition count (measured at sf0.1:
-    16 → 6 jobs, 0.85× for the 8-merge bench entry — each tiny
-    per-merge argmax was paying AQE stage-jobs and a full task wave)."""
+    Merges 2..k run under ``operators.iterative.loop_scope``: the
+    first pair-count job counts the exploded pair instances for free
+    via ``observe``, and the remaining fixed-shape merge rounds run
+    with AQE off and a size-derived shuffle partition count (measured
+    at sf0.1: 16 → 6 jobs, 0.85× for the 8-merge bench entry — each
+    tiny per-merge argmax was paying AQE stage-jobs and a full task
+    wave)."""
     from contextlib import ExitStack
 
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.operators.iterative import loop_scope
 
     spark = df.sparkSession
     merges: list[tuple[str, str, int]] = []
@@ -205,8 +205,8 @@ def learn_bpe(
                 .collect()
             )
             if it == 0:
-                p_loop, _ = loop_partitions(spark, int(obs.get["np"] or 0))
-                scope.enter_context(loop_conf(spark, p_loop))
+                n_rows = int(obs.get["np"] or 0)
+                scope.enter_context(loop_scope(spark, n_rows))
             if pending_unpersist is not None:
                 pending_unpersist.unpersist()
                 pending_unpersist = None

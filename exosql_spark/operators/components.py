@@ -47,11 +47,11 @@ def connected_components(
     O(log² n) regardless of diameter."""
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.operators.iterative import loop_scope
 
     # symmetrize once: propagate both directions; the row counts ride
-    # the two init checkpoints via observe (r19, zero extra jobs) to
-    # size the iteration scope's partitions
+    # the two init checkpoints via observe (zero extra jobs) to size
+    # the iteration scope's partitions
     obs_e = Observation("cc_edges")
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -73,12 +73,9 @@ def connected_components(
         .observe(obs0, F.count(F.lit(1)).alias("nv"))
         .localCheckpoint()
     )
-    nv = int(obs0.get["nv"] or 0)
-    n2e = int(obs_e.get["n2e"] or 0)
-    spark = edges.sparkSession
-    p_loop, _ = loop_partitions(spark, max(nv, n2e))
+    n_rows = max(int(obs0.get["nv"] or 0), int(obs_e.get["n2e"] or 0))
     rounds = 0
-    with loop_conf(spark, p_loop):
+    with loop_scope(edges.sparkSession, n_rows):
         while max_iterations is None or rounds < max_iterations:
             rounds += 1
             # candidate labels arriving over edges
@@ -160,7 +157,7 @@ def connected_components_star(
     fixpoint (the graph has collapsed into depth-1 stars)."""
     from pyspark.sql import Observation
 
-    from exosql_spark.operators.iterative import loop_conf, loop_partitions
+    from exosql_spark.operators.iterative import loop_scope
 
     obs_n = Observation("ccs_nodes")
     nodes = (
@@ -176,15 +173,12 @@ def connected_components_star(
         .observe(obs_e, F.count(F.lit(1)).alias("ne"))
         .localCheckpoint()
     )
-    nv = int(obs_n.get["nv"] or 0)
-    ne = int(obs_e.get["ne"] or 0)
-    spark = edges.sparkSession
-    # r19 iteration scope (see operators.iterative); the star rounds'
-    # set-equality convergence check stays — edge-set equality is not
-    # a per-row aggregate the way label propagation's changed count is
-    p_loop, _ = loop_partitions(spark, max(nv, ne))
+    n_rows = max(int(obs_n.get["nv"] or 0), int(obs_e.get["ne"] or 0))
+    # the star rounds' set-equality convergence check stays — edge-set
+    # equality is not a per-row aggregate the way label propagation's
+    # changed count is
     converged = False
-    with loop_conf(spark, p_loop):
+    with loop_scope(edges.sparkSession, n_rows):
         for _ in range(max_iterations):
             out = _star_round(
                 _symmetrize(_star_round(_symmetrize(e), True)), False

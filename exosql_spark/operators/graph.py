@@ -7,19 +7,27 @@ can filter or weight pages by them; Brin & Page 1998).  The input is
 the natural Spark shape — an ``(src, dst)`` edge DataFrame — and the
 computation is the classic synchronous power iteration:
 
-    rank ← (1−d)/N + d·(Σ_in rank/out_deg + dangling_mass/N)
+    rank ← (1−d)·t + d·(Σ_in rank/out_deg + dangling_mass·t)
+
+with teleport vector t = 1/N everywhere (PageRank), or t = 1/|S| on a
+trusted seed set S and 0 elsewhere (TrustRank, Gyöngyi, Garcia-Molina
+& Pedersen, VLDB 2004): seeded, dangling mass returns to the seeds, so
+a vertex unreachable from S keeps rank exactly 0.0 — the spam signal.
 
 Distributed shape per iteration (everything stays in the job graph —
-the only driver scalar is N, one number):
+the only driver scalars are N and |S|, both from one job):
 
 - **contributions**: edges ⋈ ranks on src (ranks is |V|-sized, the
   smaller side at web scale after the first aggregation; AQE picks
   the join strategy) → groupBy dst, one map-side-combined shuffle
   keyed by vertex;
 - **dangling mass** (vertices with no out-edges must redistribute
-  their rank uniformly or total mass leaks): a 1-row aggregate over
+  their rank along t or total mass leaks): a 1-row aggregate over
   the zero-out-degree ranks, attached by broadcast ``crossJoin`` —
   in-plan, no collect;
+- **teleport vector**: a constant unseeded; seeded, one extra double
+  ``_t`` on the |V|-sized rank frame, so the seed set costs nothing
+  at any scale;
 - **lineage bound — checkpoint, not persist**: each rank generation
   is ``localCheckpoint``-ed (eager).  Persist alone is NOT enough
   here, unlike bpe.learn_bpe / clustering.kmeans where each
@@ -45,15 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from exosql_spark.cache import managed_persist
-
-# The loop-scope helpers live in operators.iterative (r19; shared with
-# bpe.learn_bpe).  Private aliases keep this module's call sites and
-# the pinned tests stable.
-from exosql_spark.operators.iterative import (  # noqa: E402
-    LOOP_ROWS_PER_TASK as _LOOP_ROWS_PER_TASK,
-    loop_conf as _loop_conf,
-    loop_partitions as _loop_partitions,
-)
+from exosql_spark.operators.iterative import loop_scope
 
 
 def pagerank(
@@ -65,14 +65,33 @@ def pagerank(
     vertices: DataFrame | None = None,
     tol: float | None = None,
     weight: str | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Up to ``n_iter`` synchronous PageRank iterations over an edge
     table.  Returns (``id``, ``rank``); ranks sum to 1 (dangling mass
-    is redistributed uniformly).  ``vertices`` (one ``id`` column)
-    widens the vertex set beyond edge endpoints — isolated vertices
-    then participate as pure dangling nodes.  Parallel edges are
-    counted as distinct edges (contribution proportional to
-    multiplicity), the usual multigraph convention.
+    is redistributed along the teleport vector).  ``vertices`` (one
+    ``id`` column) widens the vertex set beyond edge endpoints —
+    isolated vertices then participate as pure dangling nodes.
+    Parallel edges are counted as distinct edges (contribution
+    proportional to multiplicity), the usual multigraph convention.
+
+    ``seeds`` (one ``id`` column) turns this into TrustRank (Gyöngyi,
+    Garcia-Molina & Pedersen, VLDB 2004, "Combating web spam with
+    TrustRank"): PageRank with the teleport vector restricted to a
+    trusted seed set, so rank flows outward from vetted pages and
+    link-farm spam that mere in-degree rewards gets structurally
+    demoted.  Unseeded PageRank measures raw centrality, the seeded
+    call measures centrality REACHABLE FROM TRUST, and the gap between
+    the two is the classic spam signal.  Both run one update:
+
+        rank ← (1−d)·t + d·(Σ_in rank/out_deg + dangling_mass·t)
+
+    with t(v) = 1/|V| unseeded, and t(v) = 1/|S| for v in ``seeds``,
+    else 0, seeded; rank starts at t.  Seeded, dangling mass returns
+    to the seeds, not uniformly — mass unreachable from trust stays
+    EXACTLY 0.0 (not merely small), which the planted oracle pins, and
+    ranks sum to 1 over the seed-reachable set.  Seeds join the vertex
+    set; an empty seed set yields rank 0.0 for every vertex.
 
     ``tol`` enables convergence early-stop: iteration ends once
     ``max_v |rank_v - prev_rank_v| < tol`` — one extra 1-row aggregate
@@ -96,6 +115,8 @@ def pagerank(
     exactly the weighted call with weight ≡ 1."""
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
+    from pyspark.sql import Observation
+
     # The edge table feeds EVERY iteration's contribution join: hash-
     # partition it by source once and persist, so iterations re-read a
     # materialized, already-partitioned frame instead of re-scanning
@@ -118,69 +139,66 @@ def pagerank(
     )
     if vertices is not None:
         verts = verts.unionByName(vertices.select(F.col("id")))
+    if seeds is not None:
+        seed_ids = seeds.select("id").distinct()
+        # |S| rides the vertex count's job (no job of its own)
+        obs_s = Observation("pagerank_seeds")
+        verts = verts.unionByName(
+            seed_ids.observe(obs_s, F.count(F.lit(1)).alias("ns"))
+        )
     verts = verts.distinct().persist()
-    n = verts.count()  # the one driver scalar; also materializes verts
-    if n == 0:
+    n = verts.count()  # the one driver job; also materializes verts
+    n_seeds = n if seeds is None else int(obs_s.get["ns"] or 0)
+    if n_seeds == 0:
         verts.unpersist()
         e.unpersist()
-        return verts.withColumn("rank", F.lit(0.0))
+        return verts.select("id", F.lit(0.0).alias("rank"))
 
+    init, t, keep = verts, F.lit(1.0 / n), ["id", "_deg"]
+    if seeds is not None:
+        init = verts.join(
+            seed_ids.withColumn("_t", F.lit(1.0 / n_seeds)), "id", "left"
+        ).fillna(0.0, ["_t"])
+        t, keep = F.col("_t"), keep + ["_t"]
     # out-strength: Σ weights per source (== out-degree when
     # unweighted, since every _w is 1.0); ``_dc`` counts the rows so
     # Σ_dc == |E| rides the init observation for free — the loop's
-    # partition sizing (r19, _loop_conf) needs the edge count and this
+    # partition sizing (loop_scope) needs the edge count and this
     # aggregation already scans every edge exactly once
     out_deg = e.groupBy(F.col("_s").alias("id")).agg(
         F.sum("_w").alias("_deg"),
         F.count(F.lit(1)).alias("_dc"),
     )
-    # (id, deg, rank): deg NULL marks dangling vertices; checkpointed
-    # so every iteration starts from a lineage-free frame.
+    # (id, deg, [_t,] rank): deg NULL marks dangling vertices;
+    # checkpointed so every iteration starts from a lineage-free frame.
     # Dangling fast path (r18 optimization, guide §1.2): whether any
     # vertex is dangling is a property of the GRAPH, not the iteration —
     # counted ONCE via ``observe`` during the init frame's checkpoint
     # job (zero extra jobs) instead of paying a full-frame aggregate
     # plus a broadcast build in every iteration.  When no vertex is
     # dangling the per-iteration mass is exactly 0.0 and
-    # ``in + 0.0/n == in`` bit-for-bit, so skipping the attachment
+    # ``in + 0.0·t == in`` bit-for-bit, so skipping the attachment
     # leaves every rank identical; graphs WITH dangling vertices keep
     # the original path.
-    from pyspark.sql import Observation
-
     obs_d = Observation("pagerank_dangling")
     ranks = (
-        verts.join(out_deg, "id", "left")
+        init.join(out_deg, "id", "left")
         .observe(
             obs_d,
             F.sum(F.when(F.col("_deg").isNull(), 1).otherwise(0)).alias("nd"),
             F.sum("_dc").alias("ne"),
         )
-        .select("id", "_deg", F.lit(1.0 / n).alias("rank"))
+        .select(*keep, t.alias("rank"))
         .localCheckpoint()
     )
     verts.unpersist()
 
-    teleport = (1.0 - damping) / n
     has_dangling = (obs_d.get["nd"] or 0) > 0
     ne = int(obs_d.get["ne"] or 0)
-    spark = edges.sparkSession
-    # r19 (guide §2.2): the loop's exchanges move O(|V|)-bounded rank
-    # rows (map-side-combined contribution aggregation, |V|-row
-    # re-attach join), so its shuffle partition count should follow the
-    # MEASURED graph size, not the session ceiling — at the ceiling, a
-    # small graph pays a full task wave per exchange per iteration for
-    # rows that fit one task.  When the derived count is far below the
-    # edge frame's layout, ``e`` is re-laid-out ONCE from its cache (a
-    # bounded job over an already-small frame — the re-layout only
-    # triggers when the graph is small relative to the ceiling, so its
-    # cost is self-limiting; big graphs keep their layout and skip it).
-    p_loop, default_p = _loop_partitions(spark, max(n, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            e2 = e.repartition(p_loop, "_s").persist()
-            e2.count()  # materialize from e's cache before dropping it
-            e.unpersist()
-            e = e2
+    # the loop's exchanges move O(|V|)-bounded rank rows (map-side-
+    # combined contribution aggregation, |V|-row re-attach join), so
+    # the scope sizes its partitions from the MEASURED graph size
+    with loop_scope(edges.sparkSession, max(n, ne), (e, "_s")) as (e,):
         for _ in range(n_iter):
             prev_ranks = ranks
             contrib = (
@@ -194,21 +212,17 @@ def pagerank(
                 .groupBy(F.col("_d").alias("id"))
                 .agg(F.sum(F.col("_c") * F.col("_w")).alias("_in"))
             )
-            nxt = ranks.select("id", "_deg").join(contrib, "id", "left")
+            nxt = ranks.select(*keep).join(contrib, "id", "left")
+            inflow = F.coalesce(F.col("_in"), F.lit(0.0))
             if has_dangling:
                 dangling = ranks.filter(F.col("_deg").isNull()).agg(
                     F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
                 )
-                new_rank = F.lit(teleport) + F.lit(damping) * (
-                    F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm") / n
-                )
                 nxt = nxt.crossJoin(F.broadcast(dangling))  # 1-row mass
-            else:
-                new_rank = F.lit(teleport) + F.lit(damping) * F.coalesce(
-                    F.col("_in"), F.lit(0.0)
-                )
+                inflow = inflow + F.col("_dm") * t
+            new_rank = F.lit(1.0 - damping) * t + F.lit(damping) * inflow
             ranks = nxt.select(
-                "id", "_deg", new_rank.alias("rank")
+                *keep, new_rank.alias("rank")
             ).localCheckpoint(
                 # eager: truncates the 3-ref lineage
             )
@@ -225,7 +239,6 @@ def pagerank(
                 )
                 if delta is not None and delta < tol:
                     break
-    e.unpersist()
     return ranks.select("id", "rank")
 
 
@@ -453,7 +466,7 @@ def hits(
     from pyspark.sql import Observation
 
     # endpoint union has exactly 2|E| rows — the edge count rides the
-    # vertex count's job for free (r19, _loop_conf partition sizing)
+    # vertex count's job for free (loop_scope partition sizing)
     obs_e = Observation("hits_edges")
     verts = (
         e_src.select(F.col("_s").alias("id"))
@@ -475,204 +488,59 @@ def hits(
     ).localCheckpoint()
 
     ne = int(obs_e.get["n2e"] or 0) // 2
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there); both
-    # persisted edge layouts are re-laid-out once when the graph is
-    # small relative to the session's partition ceiling
-    p_loop, default_p = _loop_partitions(spark, max(n, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            es2 = e_src.repartition(p_loop, "_s").persist()
-            ed2 = e_dst.repartition(p_loop, "_d").persist()
-            es2.count()
-            ed2.count()  # materialize from the caches before dropping them
-            e_src.unpersist()
-            e_dst.unpersist()
-            e_src, e_dst = es2, ed2
-        scores = _hits_loop(e_src, e_dst, scores, n_iter)
-    e_src.unpersist()
-    e_dst.unpersist()
-    return scores
-
-
-def _hits_loop(e_src, e_dst, scores, n_iter):
-    for _ in range(n_iter):
-        # authority half-step: pull hub mass along edges, normalize
-        a_in = (
-            e_src.join(
-                scores.select(F.col("id").alias("_s"), "hub"), "_s"
-            )
-            .groupBy(F.col("_d").alias("id"))
-            .agg(F.sum("hub").alias("_a"))
-        )
-        auth = scores.select("id", "hub").join(a_in, "id", "left").select(
-            "id", "hub", F.coalesce(F.col("_a"), F.lit(0.0)).alias("_a")
-        )
-        a_norm = auth.agg(F.sum("_a").alias("_na"))
-        auth = (
-            auth.crossJoin(F.broadcast(a_norm))
-            .select(
-                "id",
-                "hub",
-                F.when(F.col("_na") > 0, F.col("_a") / F.col("_na"))
-                .otherwise(F.lit(0.0))
-                .alias("auth"),
-            )
-            .localCheckpoint()
-        )
-        # hub half-step: pull the NEW authority mass back, normalize
-        h_in = (
-            e_dst.join(
-                auth.select(F.col("id").alias("_d"), "auth"), "_d"
-            )
-            .groupBy(F.col("_s").alias("id"))
-            .agg(F.sum("auth").alias("_h"))
-        )
-        hub = auth.select("id", "auth").join(h_in, "id", "left").select(
-            "id", "auth", F.coalesce(F.col("_h"), F.lit(0.0)).alias("_h")
-        )
-        h_norm = hub.agg(F.sum("_h").alias("_nh"))
-        scores = (
-            hub.crossJoin(F.broadcast(h_norm))
-            .select(
-                "id",
-                F.when(F.col("_nh") > 0, F.col("_h") / F.col("_nh"))
-                .otherwise(F.lit(0.0))
-                .alias("hub"),
-                "auth",
-            )
-            .localCheckpoint()
-        )
-    return scores.select("id", "hub", "auth")
-
-
-def trustrank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004
-    "Combating web spam with TrustRank"): PageRank with the teleport
-    vector restricted to a trusted SEED set — rank flows outward from
-    vetted pages, so link-farm spam that mere in-degree rewards gets
-    structurally demoted.  This is the second half of the link-graph
-    curation prior pair: :func:`pagerank` measures raw centrality,
-    trustrank measures centrality REACHABLE FROM TRUST, and the gap
-    between the two is the classic spam signal.
-
-        rank ← (1−d)·t + d·(Σ_in rank/out_deg + dangling_mass·t)
-
-    with t(v) = 1/|S| for v in ``seeds`` (one ``id`` column), else 0;
-    rank is initialized to t (the TrustRank convention).  Dangling
-    mass returns to the seeds, not uniformly — mass unreachable from
-    trust must stay zero, which is the property the planted oracle
-    pins (an isolated component's rank is exactly 0.0, not merely
-    small).  Ranks sum to 1 over the seed-reachable set.
-
-    Distributed shape per iteration: IDENTICAL to pagerank's — one
-    map-side-combined keyed aggregation for contributions against the
-    once-partitioned persisted edge table, a 1-row dangling aggregate
-    attached by broadcast crossJoin, localCheckpoint bounding the
-    3-reference lineage.  The teleport column ``_t`` rides the
-    |V|-sized rank frame (one extra double), so the seed set costs
-    nothing at any scale."""
-    if n_iter < 0:
-        raise ValueError(f"n_iter must be >= 0, got {n_iter}")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    e = e.repartition(F.col("_s")).persist()
-    verts = (
-        e.select(F.col("_s").alias("id"))
-        .unionByName(e.select(F.col("_d").alias("id")))
-        .unionByName(seeds.select(F.col("id")))
-        .distinct()
-    )
-    n_seeds = seeds.select("id").distinct().count()
-    if n_seeds == 0:
-        e.unpersist()
-        return verts.select("id", F.lit(0.0).alias("rank"))
-
-    seed_t = seeds.select("id").distinct().withColumn(
-        "_t", F.lit(1.0 / n_seeds)
-    )
-    out_deg = e.groupBy(F.col("_s").alias("id")).agg(
-        F.count(F.lit(1)).cast("double").alias("_deg")
-    )
-    # Same dangling fast path as pagerank (r18): the dangling set is a
-    # graph property — counted once via ``observe`` during the init
-    # checkpoint job (zero extra jobs); when empty, ``_dm * _t`` is
-    # exactly 0.0 every iteration, so dropping the aggregate +
-    # broadcast attachment leaves every rank identical.
-    from pyspark.sql import Observation
-
-    obs_d = Observation("trustrank_dangling")
-    ranks = (
-        verts.join(out_deg, "id", "left")
-        .join(seed_t, "id", "left")
-        .select(
-            "id",
-            "_deg",
-            F.coalesce(F.col("_t"), F.lit(0.0)).alias("_t"),
-            F.coalesce(F.col("_t"), F.lit(0.0)).alias("rank"),
-        )
-        .observe(
-            obs_d,
-            F.sum(F.when(F.col("_deg").isNull(), 1).otherwise(0)).alias("nd"),
-            # Σ out-degree == |E| (``_deg`` IS a row count here) and the
-            # row count == |V| — both ride the init checkpoint for free;
-            # the loop's partition sizing (r19, _loop_conf) needs them
-            F.sum("_deg").alias("ne"),
-            F.count(F.lit(1)).alias("nv"),
-        )
-        .localCheckpoint()
-    )
-    has_dangling = (obs_d.get["nd"] or 0) > 0
-    ne = int(obs_d.get["ne"] or 0)
-    nv = int(obs_d.get["nv"] or 0)
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there)
-    p_loop, default_p = _loop_partitions(spark, max(nv, ne))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            e2 = e.repartition(p_loop, "_s").persist()
-            e2.count()  # materialize from e's cache before dropping it
-            e.unpersist()
-            e = e2
+    # same size-derived loop scope as pagerank; both persisted edge
+    # layouts go through it
+    with loop_scope(
+        edges.sparkSession, max(n, ne), (e_src, "_s"), (e_dst, "_d")
+    ) as (e_src, e_dst):
         for _ in range(n_iter):
-            contrib = (
-                e.join(
-                    ranks.select(
-                        F.col("id").alias("_s"),
-                        (F.col("rank") / F.col("_deg")).alias("_c"),
-                    ),
-                    "_s",
+            # authority half-step: pull hub mass along edges, normalize
+            a_in = (
+                e_src.join(
+                    scores.select(F.col("id").alias("_s"), "hub"), "_s"
                 )
                 .groupBy(F.col("_d").alias("id"))
-                .agg(F.sum("_c").alias("_in"))
+                .agg(F.sum("hub").alias("_a"))
             )
-            nxt = ranks.select("id", "_deg", "_t").join(contrib, "id", "left")
-            if has_dangling:
-                dangling = ranks.filter(F.col("_deg").isNull()).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+            auth = scores.select("id", "hub").join(a_in, "id", "left").select(
+                "id", "hub", F.coalesce(F.col("_a"), F.lit(0.0)).alias("_a")
+            )
+            a_norm = auth.agg(F.sum("_a").alias("_na"))
+            auth = (
+                auth.crossJoin(F.broadcast(a_norm))
+                .select(
+                    "id",
+                    "hub",
+                    F.when(F.col("_na") > 0, F.col("_a") / F.col("_na"))
+                    .otherwise(F.lit(0.0))
+                    .alias("auth"),
                 )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                new_rank = F.lit(1.0 - damping) * F.col("_t") + F.lit(
-                    damping
-                ) * (
-                    F.coalesce(F.col("_in"), F.lit(0.0))
-                    + F.col("_dm") * F.col("_t")
+                .localCheckpoint()
+            )
+            # hub half-step: pull the NEW authority mass back, normalize
+            h_in = (
+                e_dst.join(
+                    auth.select(F.col("id").alias("_d"), "auth"), "_d"
                 )
-            else:
-                new_rank = F.lit(1.0 - damping) * F.col("_t") + F.lit(
-                    damping
-                ) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ranks = nxt.select(
-                "id", "_deg", "_t", new_rank.alias("rank")
-            ).localCheckpoint()
-    e.unpersist()
-    return ranks.select("id", "rank")
+                .groupBy(F.col("_s").alias("id"))
+                .agg(F.sum("auth").alias("_h"))
+            )
+            hub = auth.select("id", "auth").join(h_in, "id", "left").select(
+                "id", "auth", F.coalesce(F.col("_h"), F.lit(0.0)).alias("_h")
+            )
+            h_norm = hub.agg(F.sum("_h").alias("_nh"))
+            scores = (
+                hub.crossJoin(F.broadcast(h_norm))
+                .select(
+                    "id",
+                    F.when(F.col("_nh") > 0, F.col("_h") / F.col("_nh"))
+                    .otherwise(F.lit(0.0))
+                    .alias("hub"),
+                    "auth",
+                )
+                .localCheckpoint()
+            )
+    return scores.select("id", "hub", "auth")
 
 
 def kcore(
@@ -701,7 +569,7 @@ def kcore(
     graphs — link farms form dense high-core subgraphs while organic
     content sits in low cores, and conversely a crawl frontier's
     quality tail is the 1-core fringe; it complements
-    pagerank/trustrank (flow-based) with a purely combinatorial
+    pagerank, seeded or not (flow-based), with a purely combinatorial
     density measure.
 
     Distributed shape per iteration: ONE keyed shuffle joins the
@@ -747,7 +615,7 @@ def kcore(
         adj.groupBy("id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         # Σ c == Σ deg == 2|E| (the convergence scalar) and the row
-        # count == |V| — the loop's partition sizing (r19, _loop_conf)
+        # count == |V| — the loop's partition sizing (loop_scope)
         # reads both off the init job for free
         .observe(obs0, F.sum("c").alias("s"), F.count(F.lit(1)).alias("nv"))
         .localCheckpoint()
@@ -757,17 +625,10 @@ def kcore(
     from pyspark.sql import Window
 
     w_desc = Window.partitionBy("id").orderBy(F.col("_cn").desc())
-    spark = edges.sparkSession
-    # r19: same size-derived loop scope as pagerank (see there); the
-    # per-iteration frames are the 2|E|-row neighbor expansion and the
-    # |V|-row c frame
-    p_loop, default_p = _loop_partitions(spark, max(nv, int(prev_sum or 0)))
-    with _loop_conf(spark, p_loop):
-        if p_loop * 2 <= default_p:
-            adj2 = adj.repartition(p_loop, "nb").persist()
-            adj2.count()  # materialize from adj's cache before dropping it
-            adj.unpersist()
-            adj = adj2
+    # same size-derived loop scope as pagerank; the per-iteration frames
+    # are the 2|E|-row neighbor expansion and the |V|-row c frame
+    n_rows = max(nv, int(prev_sum or 0))
+    with loop_scope(edges.sparkSession, n_rows, (adj, "nb")) as (adj,):
         for i in range(max_iter):
             neigh = adj.join(
                 c.select(F.col("id").alias("nb"), F.col("c").alias("_cn")),
@@ -786,5 +647,4 @@ def kcore(
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
-    adj.unpersist()
     return c.select("id", F.col("c").cast("int").alias("coreness"))

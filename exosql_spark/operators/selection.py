@@ -515,7 +515,8 @@ def link_quality_select(
     makes the cut — the consumer side of the graph tier (r15 verdict
     Next #4: pagerank/trustrank/kcore existed but nothing USED them in
     a selection).  ``priors`` is one row per site ``id`` with
-    ``rank`` (trustrank — centrality reachable from trusted seeds;
+    ``rank`` (TrustRank, i.e. ``graph.pagerank`` with ``seeds`` —
+    centrality reachable from trusted seeds;
     0.0 means structurally unreachable from trust, the spam signal)
     and ``coreness`` (k-core number — link farms form dense high-core
     subgraphs).  The classic crawl-curation rule implemented here:

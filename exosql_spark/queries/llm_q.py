@@ -4768,8 +4768,8 @@ ORDER BY role
     tags=("llm", "graph", "scale"),
 )
 def graph_trustrank_star_planted(spark, sf_dir):
-    """TrustRank seeded centrality (operators/graph.trustrank;
-    Gyöngyi et al. 2004) with a CLOSED-FORM oracle — the
+    """TrustRank seeded centrality (operators/graph.pagerank with
+    ``seeds``; Gyöngyi et al. 2004) with a CLOSED-FORM oracle — the
     spam-demotion half of the link-graph curation prior pair: rank
     flows outward from a trusted seed set, and pages unreachable from
     trust get EXACTLY zero, which is the structural property raw
@@ -4788,7 +4788,7 @@ def graph_trustrank_star_planted(spark, sf_dir):
     edge table, a 1-row broadcast dangling attachment, and
     localCheckpoint lineage bounds; the teleport vector rides the
     |V|-sized rank frame as one extra column."""
-    from exosql_spark.operators.graph import trustrank
+    from exosql_spark.operators.graph import pagerank
     from exosql_spark.queries._util import fround
 
     t = Tables(spark, sf_dir)
@@ -4809,7 +4809,7 @@ def graph_trustrank_star_planted(spark, sf_dir):
         )
     )
     seeds = spark.range(1).select(F.lit(0).cast("long").alias("id"))
-    ranks = trustrank(edges, seeds, n_iter=10, damping=0.85)
+    ranks = pagerank(edges, n_iter=10, damping=0.85, seeds=seeds)
     return (
         ranks.select(
             F.when(F.col("id") == 0, "center")
@@ -4849,7 +4849,7 @@ def graph_kcore_planted(spark, sf_dir):
     combinatorial density prior of web-graph curation (link farms
     form dense high-core subgraphs, organic content sits in low
     cores; the quality tail of a crawl is the 1-core fringe) —
-    orthogonal to the flow-based pagerank/trustrank pair.
+    orthogonal to flow-based pagerank, seeded or not.
 
     The planted graph unions (a) the repo's closed-form 5-chains over
     the real doc_id space (the CC entries' construction — every chain
@@ -4934,7 +4934,7 @@ def corpus_select_link_quality(spark, sf_dir):
     """The graph priors CONSUMED by a corpus selection (r15 verdict
     Next #4: pagerank/trustrank/kcore existed but nothing used them):
     ``selection.link_quality_select`` joins a per-site prior table —
-    trustrank rank ⊕ k-core coreness over ONE link graph — onto the
+    seeded pagerank (TrustRank) rank ⊕ k-core coreness over ONE link graph — onto the
     documents corpus and keeps docs with ``rank > 0 AND coreness ≤
     8`` (drop what trust can't reach; drop dense-farm neighborhoods).
 
@@ -4957,7 +4957,7 @@ def corpus_select_link_quality(spark, sf_dir):
     amortizes across every selection that reuses the table — the
     iteration cost lives in the graph tier's audited loops, not in
     the per-corpus-pass plan."""
-    from exosql_spark.operators.graph import kcore, trustrank
+    from exosql_spark.operators.graph import kcore, pagerank
     from exosql_spark.operators.selection import link_quality_select
     from exosql_spark.queries._util import fround
 
@@ -4984,7 +4984,7 @@ def corpus_select_link_quality(spark, sf_dir):
     )
     edges = star.unionByName(farm).unionByName(pair)
     seeds = spark.range(1).select(F.lit(0).cast("long").alias("id"))
-    priors = trustrank(edges, seeds, n_iter=10, damping=0.85).join(
+    priors = pagerank(edges, n_iter=10, damping=0.85, seeds=seeds).join(
         kcore(edges), "id", "full"
     )
     docs = (

@@ -807,7 +807,7 @@ def streaming_pagerank_parity(spark, sf_dir):
     halves almost form): the STREAM-BUILT stores are now CONSUMED by
     the curation tier.  The union of both stores is one three-regime
     link graph — trusted star (this entry's rank half), K₁₀ farm and
-    C₂₀ cycle (the coreness half) — so a trustrank refresh (seeds =
+    C₂₀ cycle (the coreness half) — so a TrustRank refresh (seeds =
     {star hub}) ⊕ kcore refresh over ``read_edges(estore) ∪
     read_edges(kestore)`` yields exactly the prior-table shape
     ``selection.link_quality_select`` consumes, and the selection
@@ -923,16 +923,15 @@ def streaming_pagerank_parity(spark, sf_dir):
     )
 
     # r17: consume BOTH stream-built stores as one three-regime link
-    # graph — refreshed trustrank ⊕ coreness priors into the same
-    # selection operator the batch entry exercises
-    from exosql_spark.operators.graph import trustrank
+    # graph — refreshed TrustRank (seeded pagerank) ⊕ coreness priors
+    # into the same selection operator the batch entry exercises
     from exosql_spark.operators.selection import link_quality_select
 
     union_edges = streaming.read_edges(spark, estore).unionByName(
         streaming.read_edges(spark, kestore)
     )
     seeds = spark.range(1).select(F.lit(0).cast("long").alias("id"))
-    priors = trustrank(union_edges, seeds, n_iter=10, damping=0.85).join(
+    priors = pagerank(union_edges, n_iter=10, damping=0.85, seeds=seeds).join(
         kcore(union_edges), "id", "full"
     )
     sites = (

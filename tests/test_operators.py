@@ -3888,27 +3888,27 @@ def test_graph_loop_conf_scope_and_sizing(spark):
     raises."""
     import pytest
 
-    from exosql_spark.operators import graph
+    from exosql_spark.operators import bpe, components, graph, iterative
 
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # tiny graph → floor; huge row bound → clamped at the ceiling
-    assert graph._loop_partitions(spark, 201)[0] == max(1, min(4, default))
-    big = default * graph._LOOP_ROWS_PER_TASK + 1
-    assert graph._loop_partitions(spark, big) == (default, default)
-    mid = 3 * graph._LOOP_ROWS_PER_TASK
-    assert graph._loop_partitions(spark, mid)[0] == max(
+    assert iterative.loop_partitions(spark, 201)[0] == max(1, min(4, default))
+    big = default * iterative.LOOP_ROWS_PER_TASK + 1
+    assert iterative.loop_partitions(spark, big) == (default, default)
+    mid = 3 * iterative.LOOP_ROWS_PER_TASK
+    assert iterative.loop_partitions(spark, mid)[0] == max(
         1, min(default, max(3, min(4, default)))
     )
 
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    with graph._loop_conf(spark, 2):
+    with iterative.loop_conf(spark, 2):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
 
     with pytest.raises(RuntimeError):
-        with graph._loop_conf(spark, 2):
+        with iterative.loop_conf(spark, 2):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
@@ -3919,8 +3919,160 @@ def test_graph_loop_conf_scope_and_sizing(spark):
     )
     graph.pagerank(ring, n_iter=2).collect()
     graph.kcore(ring, max_iter=2).collect()
+    graph.hits(ring, n_iter=2).collect()
+    seeds = spark.createDataFrame([(0,)], "id long")
+    graph.pagerank(ring, n_iter=2, seeds=seeds).collect()
+    pairs = ring.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    components.connected_components(pairs).collect()
+    components.connected_components_star(pairs).collect()
+    words = spark.createDataFrame(
+        [(list("abab"), 2), (list("abc"), 1)], "tokens array<string>, freq long"
+    )
+    bpe.learn_bpe(words, n_merges=2)[1].collect()
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
+
+
+def _cache_mgr_empty(spark) -> bool:
+    return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
+
+
+def test_loop_scope_relayout_and_release(spark):
+    """loop_scope re-lays out a persisted frame to the derived count
+    only when that count is at most half the session default (else the
+    frame passes through unchanged), drops the old cache only after
+    the new one is materialized, and on normal exit AND when the body
+    raises unpersists every yielded frame and restores both confs.  The
+    operators' loops inherit the release: a pagerank, hits or kcore
+    loop that raises leaves no persisted edge frame behind."""
+    from pyspark import StorageLevel
+
+    from exosql_spark.operators import graph, iterative
+
+    conf = spark.conf
+    aqe_before = conf.get("spark.sql.adaptive.enabled")
+    p_before = conf.get("spark.sql.shuffle.partitions")
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+
+    def materialized(frame):
+        cached = cache_mgr.lookupCachedData(frame._jdf).get()
+        builder = cached.cachedRepresentation().cacheBuilder()
+        return builder.isCachedColumnBuffersLoaded()
+
+    def assert_confs_restored():
+        assert conf.get("spark.sql.adaptive.enabled") == aqe_before
+        assert conf.get("spark.sql.shuffle.partitions") == p_before
+
+    df = spark.range(200).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    try:
+        spark.catalog.clearCache()
+        # default 16 → derived floor 4 ≤ 16 / 2: re-laid out to 4
+        conf.set("spark.sql.shuffle.partitions", "16")
+        old = df.repartition(16, "k").persist()
+        old.count()
+        with iterative.loop_scope(spark, 200, (old, "k")) as (new,):
+            assert new is not old
+            assert new.rdd.getNumPartitions() == 4
+            assert old.storageLevel == StorageLevel.NONE  # old cache released
+            assert new.is_cached
+            assert materialized(new)  # by the scope, before the drop
+            assert conf.get("spark.sql.adaptive.enabled") == "false"
+            assert conf.get("spark.sql.shuffle.partitions") == "4"
+        assert new.storageLevel == StorageLevel.NONE
+        assert _cache_mgr_empty(spark)
+        assert conf.get("spark.sql.shuffle.partitions") == "16"
+
+        # default 6 → derived 4 > 6 / 2: passed through unchanged
+        conf.set("spark.sql.shuffle.partitions", "6")
+        kept = df.repartition(6, "k").persist()
+        with pytest.raises(RuntimeError):
+            with iterative.loop_scope(spark, 200, (kept, "k")) as (same,):
+                assert same is kept
+                assert same.is_cached
+                raise RuntimeError("boom")
+        assert kept.storageLevel == StorageLevel.NONE
+        assert _cache_mgr_empty(spark)
+        assert conf.get("spark.sql.shuffle.partitions") == "6"
+    finally:
+        conf.set("spark.sql.shuffle.partitions", p_before)
+    assert_confs_restored()
+
+    # a loop body that raises (here: a fractional iteration count that
+    # range() rejects) releases the operator's persisted edge frames
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % 5) for i in range(5)], "src long, dst long"
+    )
+    for run in (
+        lambda: graph.pagerank(ring, n_iter=1.5),
+        lambda: graph.hits(ring, n_iter=1.5),
+        lambda: graph.kcore(ring, max_iter=1.5),
+    ):
+        with pytest.raises(TypeError):
+            run()
+        assert _cache_mgr_empty(spark)
+        assert_confs_restored()
+
+
+# Spark jobs per loop call shape on the fixed graph below, measured at
+# the commit before the loops moved onto iterative.loop_scope: first
+# without the one-time re-layout of the persisted inputs (local[4]: 4
+# loop partitions are not ≤ half the default), then with it (local[32]).
+_PARENT_LOOP_JOBS = {
+    "pagerank": (21, 22),
+    "pagerank_seeded": (25, 26),
+    "hits": (35, 37),
+    "kcore": (10, 11),
+    "connected_components": (9, 9),
+    "connected_components_star": (17, 17),
+    "learn_bpe": (7, 7),
+}
+
+
+def test_loop_jobs_no_more_than_before(spark):
+    """Every iteration loop, called on a small fixed graph under its
+    own job group, runs no more Spark jobs than it did before the
+    shared loop scope (TrustRank's figure is the old trustrank())."""
+    from exosql_spark.operators import bpe, components, graph, iterative
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 3), (10, 11)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(0,), (5,)], "id long")
+    pairs = df.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    words = spark.createDataFrame(
+        [(list("lower"), 5), (list("lowest"), 2), (list("newer"), 6),
+         (list("wider"), 3)],
+        "tokens array<string>, freq long",
+    )
+    shapes = {
+        "pagerank": lambda: graph.pagerank(df, n_iter=4).collect(),
+        "pagerank_seeded": lambda: graph.pagerank(
+            df, n_iter=4, seeds=seeds
+        ).collect(),
+        "hits": lambda: graph.hits(df, n_iter=4).collect(),
+        "kcore": lambda: graph.kcore(df).collect(),
+        "connected_components": lambda: components.connected_components(
+            pairs
+        ).collect(),
+        "connected_components_star": (
+            lambda: components.connected_components_star(pairs).collect()
+        ),
+        "learn_bpe": lambda: bpe.learn_bpe(words, n_merges=4)[1].collect(),
+    }
+    p, default = iterative.loop_partitions(spark, len(edges))
+    relaid = p * 2 <= default
+    got = {name: jobs_in(f"loop-jobs-{name}", fn) for name, fn in shapes.items()}
+    bound = {name: before[relaid] for name, before in _PARENT_LOOP_JOBS.items()}
+    assert all(got[name] <= bound[name] for name in got), (got, bound)
 
 
 def test_pagerank_tol_early_stop(spark):
@@ -4218,13 +4370,13 @@ def test_kcore_matches_peeling(spark):
 
 
 def test_trustrank_matches_reference_iteration(spark):
-    """trustrank() equals a plain-Python seeded power iteration on a
-    random digraph with a dangling vertex (its mass must return to
-    the SEEDS), and assigns exactly 0.0 to vertices unreachable from
-    the seed set."""
+    """pagerank(seeds=...) — TrustRank — equals a plain-Python seeded
+    power iteration on a random digraph with a dangling vertex (its
+    mass must return to the SEEDS), and assigns exactly 0.0 to
+    vertices unreachable from the seed set."""
     import random
 
-    from exosql_spark.operators.graph import trustrank
+    from exosql_spark.operators.graph import pagerank
 
     rng = random.Random(7)
     edges = sorted({(rng.randrange(12), rng.randrange(12)) for _ in range(30)
@@ -4236,7 +4388,10 @@ def test_trustrank_matches_reference_iteration(spark):
     seeds = [0, 5]
     df = spark.createDataFrame(edges, "src long, dst long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "id long")
-    got = {r.id: r.rank for r in trustrank(df, sdf, n_iter=8, damping=0.85).collect()}
+    got = {
+        r.id: r.rank
+        for r in pagerank(df, n_iter=8, damping=0.85, seeds=sdf).collect()
+    }
 
     out = {}
     nodes = set(seeds)
